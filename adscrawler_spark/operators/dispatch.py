@@ -11,9 +11,9 @@ driver loops.
 
 Scale notes: every step is window/anti-join work partitioned by
 (store, group[, country]) — thousands of queues would distribute the
-same way; nothing collects to the driver.  The lock claim reuses the
-anti-join seen-set shape (operators/seen.py) rather than a per-id
-round-trip.
+same way; nothing collects to the driver.  The lock claim is one
+exact anti-join on the lock key, the same shape as the seen-set probe
+(operators/seen.py), rather than a per-id round-trip.
 
 Determinism deviation (documented): the reference sorts by
 country_code with pandas quicksort, leaving within-country order

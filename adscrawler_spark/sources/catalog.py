@@ -22,10 +22,11 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -79,17 +80,29 @@ class SnapshotTable:
         self, df: DataFrame, partition_by: list[str] | None = None
     ) -> list[str]:
         path = os.path.join(self.dir, "data", uuid.uuid4().hex)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            # Iceberg-style partition spec as hive directories; readers
-            # recover the partition columns via discovery on each
-            # committed fileset root.
-            writer = (
-                df.repartition(*[F.col(c) for c in partition_by])
-                .write.mode("overwrite")
-                .partitionBy(*partition_by)
-            )
-        writer.parquet(path)
+        if not partition_by:
+            df.write.mode("overwrite").parquet(path)
+            return [path]
+        # Iceberg-style partition spec as hive directories; readers
+        # recover the partition columns via discovery on each
+        # committed fileset root.  A zero-row input writes no data
+        # files, so there is no schema to infer on read-back; and AQE
+        # replaces the empty shuffle stage with an empty relation,
+        # dropping any observation the caller hung below the exchange
+        # (its get then fails).  A row count observed above the
+        # exchange keeps that stage in the final plan and tells the
+        # empty case apart, riding the write itself: no extra action.
+        written = Observation()
+        (
+            df.repartition(*[F.col(c) for c in partition_by])
+            .observe(written, F.count(F.lit(1)).alias("n"))
+            .write.mode("overwrite")
+            .partitionBy(*partition_by)
+            .parquet(path)
+        )
+        if written.get["n"] == 0:
+            shutil.rmtree(path, ignore_errors=True)
+            return []
         return [path]
 
     def _commit(self, files: list[str], meta: dict | None = None) -> int:
@@ -118,7 +131,9 @@ class SnapshotTable:
         meta: dict | None = None,
         partition_by: list[str] | None = None,
     ) -> int:
-        """Iceberg-style append: new files + prior snapshot's files."""
+        """Iceberg-style append: new files + prior snapshot's files.
+        A partitioned append of zero rows commits the prior files
+        unchanged (an empty fileset is never committed)."""
         new_files = self._write_fileset(df, partition_by)
         snap = self.snapshot()
         old_files = snap["files"] if snap else []

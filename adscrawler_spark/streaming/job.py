@@ -452,10 +452,8 @@ def run_generation(
         .withColumn("url", F.concat(F.lit("https://"), F.col("ad_domain"), F.lit("/app-ads.txt")))
     )
     discovered = frontier_ops.with_canonical(discovered)
-    # discovery sets are tiny (distinct ad domains per generation); the
-    # exact anti-join against the seen table is cheaper than building a
-    # Bloom sidecar here.  The Bloom path (operators/seen.py) is for
-    # bulk frontier ingest, where the probe input is 10^8+ rows.
+    # the same exact anti-join on url_canon as seen.probe_unseen, the
+    # bulk-ingest probe; AQE picks the join strategy from real sizes.
     if seen_tbl is not None:
         new_urls = discovered.join(
             seen_tbl.select(F.col("url_canon").alias("_seen")),

@@ -267,7 +267,7 @@ def unseen_urls_stream(
     watermark: str = "2 hours",
 ) -> DataFrame:
     """Streaming URL-seen dedup — the Structured Streaming counterpart
-    of the batch Bloom/anti-join seen set (operators/seen.py): a
+    of the batch anti-join seen set (operators/seen.py): a
     discovered-URL stream deduped on ``url_canon`` with
     ``dropDuplicatesWithinWatermark``, so the first sighting of each
     canonical URL inside the watermark horizon passes and repeats are

@@ -53,11 +53,9 @@ def bench_queries(spark) -> dict[str, float]:
 
 
 def bench_dedup(spark) -> tuple[float, float]:
-    """Frontier-dedup throughput: canonicalize → murmur3/xxhash →
-    partitioned-Bloom probe → exact anti-join confirm (BASELINE.json
-    metric #2). Seen set = first half of a synthetic frontier."""
-    from pyspark.sql import functions as F
-
+    """Frontier-dedup throughput: canonicalize → xxhash64 → exact
+    anti-join on url_canon against the seen set (BASELINE.json metric
+    #2). Seen set = first half of a synthetic frontier."""
     from adscrawler_spark.operators import seen as seen_ops
     from adscrawler_spark.operators.frontier import with_canonical
     from adscrawler_spark.streaming.frontier_gen import synth_frontier
@@ -68,37 +66,25 @@ def bench_dedup(spark) -> tuple[float, float]:
         .select("url_canon", "url_hash64")
         .dropDuplicates(["url_canon"])
     )
-    n_seen = seen.persist().count()
+    seen.persist().count()
     frontier = synth_frontier(spark, FRONTIER_N, seed=42)
     # Untimed warm-up pass at 1/8 scale: bench/dedup_variance.py
     # measured the first dedup in a fresh session at ~240k rows/s vs
     # a ~555k ± 3k steady state (6-run study, BENCH/BASELINE.md) —
-    # the gap is codegen JIT + Arrow/bloom class loading, not the
-    # operator.  Same principle as _warmup() for the query suite.
+    # the gap is codegen JIT and class loading, not the operator.
+    # Same principle as _warmup() for the query suite.
     wn = max(FRONTIER_N // 8, 1)
-    wseen = seen.limit(wn // 2)
-    wcaches: list = []
     seen_ops.probe_unseen(
         with_canonical(synth_frontier(spark, wn, seed=11)).select(
             "url", "url_canon", "url_hash64"
         ),
-        seen_ops.build_bloom_filters(wseen),
-        wseen, seen_count=wn // 2, persisted=wcaches,
+        seen=seen.limit(wn // 2),
     ).count()
-    for c in wcaches:
-        c.unpersist()
     t0 = time.time()
-    filters = seen_ops.build_bloom_filters(seen)
     candidates = with_canonical(frontier).select("url", "url_canon", "url_hash64")
-    caches: list = []
-    unseen = seen_ops.probe_unseen(
-        candidates, filters, seen, seen_count=n_seen, persisted=caches
-    )
-    n = unseen.count()
+    n = seen_ops.probe_unseen(candidates, seen=seen).count()
     dt = time.time() - t0
     seen.unpersist()
-    for c in caches:
-        c.unpersist()
     assert n > 0
     return round(dt, 3), round(FRONTIER_N / dt, 1)
 

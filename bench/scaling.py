@@ -6,8 +6,8 @@ scaling efficiency = throughput(4N) / (4 × throughput(N)), and writes
 BENCH/BASELINE.md.
 
 Workloads (the BASELINE.json metrics):
-  1. frontier-dedup: parquet scan → partitioned-Bloom probe → exact
-     anti-join confirm (input frontier + seen set pre-written to
+  1. frontier-dedup: parquet scan → exact anti-join on url_canon
+     against the seen set (input frontier + seen set pre-written to
      parquet, untimed — the production shape is reading a materialized
      frontier table, not regenerating it);
   2. schedule+fetch: one claim → robots/budget → salted repartition →
@@ -73,8 +73,7 @@ fr = spark.read.parquet({workdir!r} + "/frontier").select(
     "url", "url_canon", "url_hash64")
 seen = spark.read.parquet({workdir!r} + "/seen")
 t0 = time.time()
-filters = seen_ops.build_bloom_filters(seen)
-unseen = seen_ops.probe_unseen(fr, filters, seen)
+unseen = seen_ops.probe_unseen(fr, seen=seen)
 n_unseen = unseen.count()
 dedup_sec = time.time() - t0
 
@@ -208,7 +207,7 @@ throughput(4N) / (4 × throughput(N)). Answer equality across
 parallelism is asserted (n_unseen / n_sigs identical).
 
 ## Workload 1 — frontier-dedup throughput
-(parquet scan → partitioned-Bloom probe → exact anti-join confirm;
+(parquet scan → exact anti-join on url_canon;
 {args.dedup_rows:,} frontier rows vs a {args.dedup_rows // 2:,}-row seen set)
 
 | cores | seconds | rows/sec |

@@ -118,8 +118,7 @@ fr = spark.read.parquet({workdir!r} + "/frontier").select(
     "url", "url_canon", "url_hash64")
 seen = spark.read.parquet({workdir!r} + "/seen")
 t0 = time.time()
-filters = seen_ops.build_bloom_filters(seen)
-unseen = seen_ops.probe_unseen(fr, filters, seen)
+unseen = seen_ops.probe_unseen(fr, seen=seen)
 n_unseen = unseen.count()
 dedup_sec = time.time() - t0
 

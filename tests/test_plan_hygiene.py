@@ -435,3 +435,30 @@ def test_sent_video_match_uses_gram_index(spark):
     assert "instr" in plan, plan
     assert "CartesianProduct" not in plan
     assert "NestedLoopJoin" not in plan
+
+
+def test_seen_probe_is_one_jvm_anti_join(spark):
+    """The seen-set probe stays one JVM left_anti join: its executed
+    plan carries no Python eval, no grouped or co-grouped pandas
+    stage and no cached relation, and nothing is handed back for the
+    caller to unpersist."""
+    from adscrawler_spark.operators import seen as seen_ops
+
+    def urls(lo, hi):
+        return seen_ops.with_url_hash64(spark.range(lo, hi).select(
+            F.concat(F.lit("host"), F.col("id"), F.lit(".com")).alias("url_canon")))
+
+    seen, frontier = urls(0, 500), urls(250, 900)
+    persisted: list = []
+    counted = seen_ops.probe_unseen(
+        frontier, seen_ops.build_bloom_filters(seen), seen, persisted=persisted
+    ).groupBy().count()
+    assert counted.collect()[0][0] == 400
+    plan = _plan(counted)
+    assert "isFinalPlan=true" in plan, plan
+    for node in ("ArrowEvalPython", "FlatMapGroupsInPandas",
+                 "FlatMapCoGroupsInPandas", "InMemoryRelation",
+                 "InMemoryTableScan"):
+        assert node not in plan, (node, plan)
+    assert "LeftAnti" in plan, plan
+    assert persisted == []

@@ -1,88 +1,50 @@
-"""URL-seen set: partitioned Bloom (no false negatives, bounded fpp,
-exact-confirm correctness) and the cuckoo fallback (insert/delete)."""
+"""URL-seen set: the probe is an exact anti-join on url_canon."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from adscrawler_spark.operators.seen import (
-    CuckooFilter,
     build_bloom_filters,
     probe_unseen,
     with_url_hash64,
 )
 
 
+def _hosts(spark, lo, hi):
+    return with_url_hash64(
+        spark.range(lo, hi).select(
+            F.concat(F.lit("host"), F.col("id"), F.lit(".com")).alias("url_canon")
+        )
+    )
+
+
 @pytest.fixture(scope="module")
 def seen_and_frontier(spark):
-    seen = with_url_hash64(
-        spark.range(0, 5000).select(
-            F.concat(F.lit("host"), F.col("id"), F.lit(".com")).alias("url_canon")
-        )
-    )
-    frontier = with_url_hash64(
-        spark.range(2500, 9000).select(
-            F.concat(F.lit("host"), F.col("id"), F.lit(".com")).alias("url_canon")
-        )
-    )
-    return seen, frontier
+    return _hosts(spark, 0, 5000), _hosts(spark, 2500, 9000)
 
 
 @pytest.mark.parametrize("threshold", [64 << 20, 0])
 def test_probe_exact_semantics(seen_and_frontier, threshold):
-    """Both probe strategies (broadcast UDF / co-grouped) must agree
-    with exact set semantics."""
+    """Exact set semantics, through the compat call shape too, whether
+    the anti-join is planned as a broadcast or a shuffled join."""
     seen, frontier = seen_and_frontier
-    filters = build_bloom_filters(seen)
-    unseen = probe_unseen(frontier, filters, seen, broadcast_threshold=threshold)
-    got = {r.url_canon for r in unseen.collect()}
+    conf = seen.sparkSession.conf
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = conf.get(key)
+    conf.set(key, str(threshold or -1))
+    try:
+        _check_exact(seen, frontier)
+    finally:
+        conf.set(key, old)
+
+
+def _check_exact(seen, frontier):
     want = {f"host{i}.com" for i in range(5000, 9000)}
-    assert got == want  # no false positives after confirm, no false negatives
-
-
-def test_bloom_prefilter_rate(seen_and_frontier):
-    """The Bloom alone must pass every seen row (no false negatives)
-    and keep false positives on unseen rows below a loose bound."""
-    seen, _ = seen_and_frontier
-    filters = build_bloom_filters(seen).collect()
-    assert all(f.m_bits >= f.n_keys * 8 for f in filters)
-    # probe seen rows through the bloom only: all must be maybe_seen
-    from adscrawler_spark.operators.seen import _positions
-
-    by_bucket = {f.bucket: f for f in filters}
-    total_fp = 0
-    rng = np.random.default_rng(42)
-    fake = rng.integers(-(2**62), 2**62, size=20000)
-    for h in fake:
-        b = int(h % 64)
-        f = by_bucket.get(b)
-        if f is None:
-            continue
-        words = np.frombuffer(f.bits, dtype=np.uint64)
-        pos = _positions(np.array([h]), f.k, f.m_bits)
-        hit = (words[(pos >> np.uint64(6)).astype(np.int64)] >> (pos & np.uint64(63))) & np.uint64(1)
-        total_fp += int(hit.all())
-    assert total_fp / 20000 < 0.02  # 12 bits/key, 7 hashes → ~0.03% theoretical
-
-
-def test_cogroup_path_never_collects_bitsets(seen_and_frontier, monkeypatch):
-    """The big-sidecar (co-grouped) strategy must be chosen from a size
-    scalar alone — pulling every Bloom bitset through the driver first
-    would be ~GBs at the 10^10-key scale the sidecar is sized for."""
-    seen, frontier = seen_and_frontier
-    filters = build_bloom_filters(seen)
-    from pyspark.sql import DataFrame
-
-    orig = DataFrame.collect
-
-    def guarded(self):
-        if any(f.name == "bits" for f in self.schema.fields):
-            raise AssertionError("bitset DataFrame collected on co-group path")
-        return orig(self)
-
-    monkeypatch.setattr(DataFrame, "collect", guarded)
-    unseen = probe_unseen(frontier, filters, seen, broadcast_threshold=0)
-    assert unseen.count() == 4000
+    for unseen in (probe_unseen(frontier, seen=seen),
+                   probe_unseen(frontier, build_bloom_filters(seen), seen)):
+        got = [r.url_canon for r in unseen.collect()]
+        assert len(got) == len(want) and set(got) == want
+        assert unseen.columns == frontier.columns
 
 
 def test_empty_seen_passthrough(seen_and_frontier, spark):
@@ -91,18 +53,38 @@ def test_empty_seen_passthrough(seen_and_frontier, spark):
     assert out.count() == frontier.count()
 
 
-def test_cuckoo_insert_contains_delete():
-    cf = CuckooFilter(capacity=10000)
-    rng = np.random.default_rng(7)
-    keys = [int(x) for x in rng.integers(-(2**62), 2**62, size=5000)]
-    for k in keys:
-        assert cf.insert(k)
-    assert all(cf.contains(k) for k in keys)
-    others = [int(x) for x in rng.integers(-(2**62), 2**62, size=5000)]
-    fp = sum(cf.contains(k) for k in others if k not in set(keys))
-    assert fp / 5000 < 0.05
-    for k in keys[:1000]:
-        assert cf.delete(k)
-    deleted_hits = sum(cf.contains(k) for k in keys[:1000])
-    assert deleted_hits / 1000 < 0.05  # residual = fingerprint collisions
-    assert all(cf.contains(k) for k in keys[1000:])
+def test_shared_hash_different_canon_stays_unseen(seen_and_frontier):
+    """The key is url_canon, not the 64-bit hash: a frontier row whose
+    url_hash64 equals a seen row's but whose url_canon differs is new."""
+    seen, _ = seen_and_frontier
+    h = seen.where("url_canon = 'host7.com'").first().url_hash64
+    frontier = (
+        seen.sparkSession.createDataFrame(
+            [("other7.com",), ("host7.com",)], "url_canon string")
+        .withColumn("url_hash64", F.lit(h))
+    )
+    got = [r.url_canon for r in probe_unseen(frontier, seen=seen).collect()]
+    assert got == ["other7.com"]
+
+
+def test_duplicate_seen_rows_neither_duplicate_nor_drop(seen_and_frontier):
+    seen, frontier = seen_and_frontier
+    tripled = seen.unionByName(seen).unionByName(seen)
+    got = sorted(r.url_canon for r in probe_unseen(frontier, seen=tripled).collect())
+    want = sorted(r.url_canon for r in probe_unseen(frontier, seen=seen).collect())
+    assert got == want and len(got) == 4000
+
+
+def test_null_url_canon_is_kept(seen_and_frontier, spark):
+    """A null url_canon equals no seen row, so it stays unseen, even
+    when the seen set holds a null url_canon of its own."""
+    seen, _ = seen_and_frontier
+    schema = "url_canon string"
+    frontier = with_url_hash64(
+        spark.createDataFrame([(None,), ("host1.com",), ("fresh.com",)], schema))
+    seen = seen.unionByName(with_url_hash64(spark.createDataFrame([(None,)], schema)))
+    got = sorted(
+        (r.url_canon for r in probe_unseen(frontier, seen=seen).collect()),
+        key=lambda c: (c is not None, c),
+    )
+    assert got == [None, "fresh.com"]

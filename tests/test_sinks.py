@@ -1,7 +1,10 @@
 """MERGE-style sinks (upsert / update-matched / delete-insert) and the
 processed-file ledger, plus keyword text cleaning (P16)."""
 
+import os
+
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from adscrawler_spark.functions.text import clean_keyword_text
@@ -110,3 +113,27 @@ def test_upsert_touch_stamps_only_replaced_rows(spark, cat):
         "b": (20, t1),  # replaced → stamped
         "c": (3, t0),   # fresh insert keeps source value
     }
+
+
+def test_partitioned_append_of_observed_empty_frame(spark, cat):
+    """A partitioned append of an observed zero-row frame: the caller's
+    observation still reads 0, no empty fileset is committed, and the
+    table still reads back (an empty fileset has no schema to infer)."""
+    frame = spark.range(100).select("id", (F.col("id") % 3).alias("store"))
+    t = cat.table("t")
+    t.append(frame, partition_by=["store"])
+    obs = Observation("empty_partitioned_append")
+    v = t.append(frame.where("id < 0").observe(obs, F.count(F.lit(1)).alias("n")),
+                 {"generation": 1}, partition_by=["store"])
+    assert obs.get == {"n": 0}
+    assert t.snapshot(v)["files"] == t.snapshot(v - 1)["files"]
+    assert t.snapshot(v)["meta"] == {"generation": 1}
+    assert t.read(spark).count() == 100
+
+    fresh = cat.table("fresh")
+    obs = Observation("empty_partitioned_first_append")
+    fresh.append(frame.where("id < 0").observe(obs, F.count(F.lit(1)).alias("n")),
+                 partition_by=["store"])
+    assert obs.get == {"n": 0}
+    assert fresh.read(spark) is None
+    assert not os.listdir(os.path.join(fresh.dir, "data"))
